@@ -3992,27 +3992,17 @@ def _remote_scan_dsv2(d: str) -> str:
     )
 
 
-_DSV2_JAR_ADDED: set[int] = set()
-
-
 def _build_remote_scan_dsv2(spark, sf_dir: str):
     import os
 
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    jar = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "jars",
-        "dd_arrow_shim.jar",
-    )
-    if id(spark) not in _DSV2_JAR_ADDED:
-        # runtime load into the (vanilla) session: ADD JAR distributes
-        # the jar to executors and installs it on the session
-        # classloader, so format("dd_arrow_dsv2") resolves without
-        # spark.jars at session creation
-        spark.sql(f"ADD JAR {jar}")
-        _DSV2_JAR_ADDED.add(id(spark))
+    from ..sources.arrow_http import _load_shim
+
+    # runtime load into the (vanilla) session, so format("dd_arrow_dsv2")
+    # resolves without spark.jars at session creation
+    _load_shim(spark)
     srv = _server_for(sf_dir)
 
     def scan(**extra):
@@ -4286,14 +4276,9 @@ def _build_remote_scan_dsv2_split_dec(spark, sf_dir: str):
     from pyspark.sql import functions as F
     from pyspark.sql import types as T
 
-    jar = os.path.join(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-        "jars",
-        "dd_arrow_shim.jar",
-    )
-    if id(spark) not in _DSV2_JAR_ADDED:
-        spark.sql(f"ADD JAR {jar}")
-        _DSV2_JAR_ADDED.add(id(spark))
+    from ..sources.arrow_http import _load_shim
+
+    _load_shim(spark)
     srv = _server_for(sf_dir)
 
     def scan(split: bool):
@@ -5780,65 +5765,77 @@ def oracle_sql_for(name: str) -> str:
 #       distinct_rows.
 #   38 + 3 + 5 + 4 = 50 exactly.
 
-_GATE_WINDOW_ROUND = 14
+# ROUND-15 DERIVATION (same policy). Window =
+#   (a) every entry round 15 touches: all eight remote entries — the
+#       dd_read_arrow* builders now run on the JVM shim (remote_agg_
+#       pushdown, remote_login_scan, remote_scan_failover,
+#       remote_scan_filter_pushdown, remote_scan_split_agg), the shim
+#       itself gains the 5xx retry and the agg_* options
+#       (remote_scan_dsv2, remote_scan_dsv2_split_dec, both also
+#       switched to the shared jar loader), and local_server.py gains
+#       two fault injections (remote_splits_plan's harness);
+#   (b) staleness rotation: the ENTIRE r12-vintage cohort (32 entries,
+#       the oldest rows in GATE_AGE.md post-r14);
+#   (c) r13-vintage fill, oldest-first per GATE_AGE.md order.
+#   8 + 32 + 10 = 50 exactly.
+
+_GATE_WINDOW_ROUND = 15
 
 _GATE_WINDOW = [
-    # -- (a) changed in the r13 optimization sessions, ungated in r13
-    #    (the two r11-vintage members are listed in cohort (c) below)
-    "text_perplexity_bigram",
-    "events_funnel",
-    "embed_knn_bruteforce",
-    # -- (b) touched (or examined for change) in round 14
-    "dedup_minhash_auto",
-    "dedup_minhash_recall_held",
-    "dedup_components",
-    "dedup_simhash",
-    "q9_product_profit",
-    # -- (c) staleness rotation: the entire r11-vintage cohort
-    #    (GATE_AGE.md post-r13, oldest first)
-    "bucketed_join_rollup",
-    "corpus_top_terms",
-    "cross_source_contamination",
-    "customer_orders_left_join",
-    "dd_search_marker",
-    "dedup_canonical_corpus",
-    "dedup_minhash_lsh",
-    "dedup_stream_screen",
-    "dedup_substring_screen",
-    "embed_cosine_neardup",
-    "embed_neardup_lsh",
-    "embed_semantic_screen",
-    "events_hourly_rollup",
-    "events_orders_asof_join",
-    "join_region_rollup",
-    "multimodal_features",
-    "multimodal_jpeg_features",
-    "multimodal_video_frames",
-    "multimodal_video_metadata",
-    "ngram_jaccard_sampled",
-    "orders_global_aggs",
-    "orders_group_agg",
-    "orders_rollup",
-    "pipeline_clean_corpus",
-    "q12_priority_shipping",
-    "q13_customer_distribution",
-    "q14_promo_effect",
-    "q15_top_supplier",
-    "q16_supplier_cnt",
-    "q22_sales_opportunity",
-    "q6_revenue",
-    "string_functions",
-    "supplier_nation_join",
-    "text_langid",
-    "text_normalize",
-    "text_quality",
-    "text_repetition",
-    "text_token_stats",
-    # -- (d) r12-vintage fill (GATE_AGE.md order)
-    "cast_matrix",
-    "cte_union_all",
-    "dedup_exact_substring",
-    "distinct_rows",
+    # -- (a) touched in round 15
+    "remote_agg_pushdown",
+    "remote_login_scan",
+    "remote_scan_dsv2",
+    "remote_scan_dsv2_split_dec",
+    "remote_scan_failover",
+    "remote_scan_filter_pushdown",
+    "remote_scan_split_agg",
+    "remote_splits_plan",
+    # -- (b) staleness rotation: the entire r12-vintage cohort
+    #    (GATE_AGE.md post-r14, oldest first)
+    "embed_ann_ivf_fullprobe",
+    "embed_ann_ivfpq_fullprobe",
+    "embed_ann_ivfpq_recall",
+    "embed_ann_recall",
+    "embed_semantic_dedup_exact",
+    "embed_semantic_dedup_recall",
+    "empty_set_laws",
+    "events_count_distinct",
+    "events_grouping_sets",
+    "events_json_extract",
+    "events_sessionize",
+    "events_view_click_attribution",
+    "layout_zorder",
+    "lineitem_date_filter_count",
+    "lineitem_full_scan",
+    "lineitem_point_filter",
+    "lineitem_sum_orderkey",
+    "nation_presence_full_join",
+    "order_by_limit",
+    "orders_cube",
+    "part_brand_stats",
+    "q18_large_volume",
+    "q21_suppliers_waiting",
+    "q4_order_priority",
+    "q8_market_share",
+    "scalar_subquery_filter",
+    "semi_anti_join",
+    "simhash_values",
+    "sketch_distinct_bounds",
+    "sketch_quantile_bounds",
+    "text_perplexity_static_lm",
+    "window_topk_per_group",
+    # -- (c) r13-vintage fill (GATE_AGE.md order)
+    "bloom_no_false_negatives",
+    "cross_source_contamination_chunked",
+    "dd_array_contains_all",
+    "dd_array_contains_all_fn",
+    "dd_version",
+    "dedup_exact",
+    "docs_length_quantiles",
+    "docs_shard_assignment",
+    "docs_stratified_sample",
+    "embed_ann_ivf_probed",
 ]
 
 

@@ -1,64 +1,66 @@
-"""`dd_read_arrow` — Arrow-IPC-over-HTTP scan as a Spark Python DataSource.
+"""`dd_read_arrow` — Arrow-IPC-over-HTTP scans of a dazzleduck fleet.
 
-Behavioral parity with the reference's table function
-(/root/reference/src/scanner/read_arrow_dd.cpp:880-898) re-expressed in
-Spark's native execution model:
+The builders (``dd_read_arrow``, ``dd_read_arrow_narrow``,
+``dd_read_arrow_agg``) run on the JVM DSv2 shim
+(``scala/DdArrowShim.scala``, format ``dd_arrow_dsv2``): schema probe,
+split planning and scan all happen inside Spark's JVM, like the
+reference's table function runs inside its host engine
+(src/scanner/read_arrow_dd.cpp:880-898). No Python
+planner or worker process is involved in a remote scan.
 
 ==============================  =========================================
-Reference mechanism             This implementation
+Reference mechanism             This implementation (JVM shim)
 ==============================  =========================================
-Bind() full-fetch for schema    ``schema()`` probes with ``LIMIT 0``
-  (read_arrow_dd.cpp:299-391,     (cheap; the reference's full fetch is a
-  buffers whole body)             documented inefficiency, SURVEY §3.1)
-split plan fetch + atomic       ``partitions()`` returns one
-  work-stealing threads           ``InputPartition`` per split; Spark's
-  (:158-190, :84-92)              task scheduler replaces the atomic
-                                  claim counter
+Bind() full-fetch for schema    ``inferSchema`` probes with ``LIMIT 0``
+  (read_arrow_dd.cpp:299-391,     and reads only the Arrow schema message
+  buffers whole body)             (the reference's full fetch is a
+                                  documented inefficiency, SURVEY §3.1)
+projection pushdown             ``pruneColumns``: the remote SELECT
+  (:246-262, :296)                lists only the columns Catalyst needs
 filter pushdown -> SQL WHERE    ``pushFilters`` serializes supported
-  (FilterToSQL :198-238;          filters to a WHERE clause, returns the
-  unsupported stay local :234)    rest to Spark for local re-apply —
-                                  identical partial-pushdown contract
-per-split HTTP fetch, whole     ``read()`` streams ``pyarrow.ipc``
-  body buffered in memory         record batches off the socket (bounded
-  (http_stream_factory.cpp:20)    memory at any scale)
-query-id per query/split        random int63 ids, same role
-  (:347-351, :457-466)
-cancel monitor thread firing    two-channel: (1) event-driven GET
-  GET /v1/cancel (:103-157)       /v1/cancel — generator close, SIGTERM
-                                  handler, atexit drain an in-flight
-                                  registry (graceful teardown paths);
-                                  (2) for JVM-killed tasks the pyspark
-                                  daemon SIGKILLs the worker — no hook
-                                  can run — so the closed TCP socket is
-                                  the cancel signal, and servers must
-                                  treat the connection as the query
-                                  lease (local_server does; bounded by
-                                  the server's write cadence)
+  (FilterToSQL :198-238;          filters to a WHERE clause and returns
+  unsupported stay local :234)    the rest to Spark — the same partial-
+                                  pushdown contract
+aggregation pushdown            ``pushAggregation``: complete pushdown
+  (aggregation_pushdown.cpp:      without splits, per-split partials with
+  247-418, IsSplitSafe            them; ``dd_read_arrow_agg`` passes its
+  :190-199)                       explicit template as the ``agg_*``
+                                  options
+split plan fetch + atomic       ``planInputPartitions`` returns one
+  work-stealing threads           partition per split; Spark's task
+  (:158-190, :84-92)              scheduler replaces the claim counter
+per-split HTTP fetch, whole     the columnar reader streams Arrow
+  body buffered in memory         batches off the socket (bounded memory)
+  (http_stream_factory.cpp:20)
+retry / replica failover        probe and plan retry 5xx and connection
+  (httpfs defaults; split         failures on the same URL; a data read
+  endpoints[])                    tries untried replicas first, then backs
+                                  off, with a fresh query id per attempt;
+                                  4xx is never retried
+cancel monitor thread firing    task teardown closes the connection (the
+  GET /v1/cancel (:103-157)       lease) and fires GET /v1/cancel; a JVM
+                                  shutdown hook sweeps in-flight queries
 ==============================  =========================================
 
-Aggregation pushdown (aggregation_pushdown.cpp) is intentionally NOT
-re-implemented: Spark's partial+final aggregation already minimizes what
-crosses the exchange, and the Python DS API exposes no aggregate hook.
-The reference itself falls back to exactly this local execution whenever
-any aggregate is unsupported — our plan equals its fallback plan, with
-Spark's strictly-stronger split-safe partials (SURVEY §2.3 A3).
+``ArrowHttpDataSource`` (format ``dd_read_arrow``) is the same scan as a
+Spark Python DataSource. The builders no longer use it; it stays as the
+reference implementation that ``tests/test_arrow_source.py``'s fault
+matrix runs side by side with the shim. It needs
+``spark.sql.python.filterPushdown.enabled=true``.
 
 Usage::
 
-    spark.dataSource.register(ArrowHttpDataSource)
-    df = (spark.read.format("dd_read_arrow")
-          .option("url", "http://host:8080")
-          .option("sql", "SELECT * FROM lineitem")   # or source_table
-          .option("split", "true")
-          .option("split_size", 1 << 20)
-          .option("auth_token", token)               # from functions.misc.login
-          .load())
+    register(spark)        # loads the shim jar, registers dd_read_arrow
+    df = dd_read_arrow(spark, "http://host:8080",
+                       source_table="lineitem", split=True,
+                       auth_token=token)     # from functions.misc.login
 """
 
 from __future__ import annotations
 
 import atexit
 import json
+import os
 import random
 import re
 import threading
@@ -438,20 +440,23 @@ def _quote_key(k: str) -> str:
     return '"' + k.strip().replace('"', '""') + '"'
 
 
-def _agg_wrap(
-    rel: str, select: str, where: str | None, group_by: list[str]
+def _base_sql(
+    sql: str | None, source_table: str | None, columns: list[str] | None
 ) -> str:
-    """The reference's aggregation-pushdown rewrite template
-    (aggregation_pushdown.cpp:247-418): ``SELECT <aggs> FROM (<rel>)
-    AS _subq [WHERE ..] [GROUP BY ..]``. Applied per split in split
-    mode; the WHERE is idempotent there (the split plan is already
-    taken over the filtered relation)."""
-    out = f"SELECT {select} FROM ({rel}) AS _subq"
-    if where:
-        out += f" WHERE {where}"
-    if group_by:
-        out += " GROUP BY " + ", ".join(_quote_key(k) for k in group_by)
-    return out
+    """The remote base relation: exactly one of sql/source_table
+    (read_arrow_dd.cpp:327-335), a table wrapped as SELECT * (:339-345),
+    and an explicit projection as the quoted-identifier SELECT list the
+    reference emits when DuckDB prunes (read_arrow_dd.cpp:246-262,
+    :296)."""
+    if bool(sql) == bool(source_table):
+        raise ValueError(
+            "dd_read_arrow: exactly one of `sql` or `source_table` required"
+        )
+    base = sql if sql else f"SELECT * FROM {source_table}"
+    if columns:
+        quoted = ", ".join(_quote_key(c) for c in columns)
+        base = f"SELECT {quoted} FROM ({base}) AS _subq"
+    return base
 
 
 @dataclass
@@ -477,27 +482,9 @@ class ArrowHttpDataSource(DataSource):
         return "dd_read_arrow"
 
     def _base_query(self) -> str:
-        sql = self.options.get("sql")
-        table = self.options.get("source_table")
-        # exactly one of sql/source_table (read_arrow_dd.cpp:327-335);
-        # source_table wraps as SELECT * (:339-345)
-        if bool(sql) == bool(table):
-            raise ValueError(
-                "dd_read_arrow: exactly one of `sql` or `source_table` required"
-            )
-        base = sql if sql else f"SELECT * FROM {table}"
-        # Projection pushdown: the Python DS API has no column-pruning
-        # hook, so the `columns` option rebuilds the remote SELECT list
-        # explicitly — the same quoted-identifier template the reference
-        # emits when DuckDB prunes (read_arrow_dd.cpp:246-262, :296).
-        cols = self.options.get("columns")
-        if cols:
-            quoted = ", ".join(
-                '"' + c.strip().replace('"', '""') + '"'
-                for c in cols.split(",")
-            )
-            base = f"SELECT {quoted} FROM ({base}) AS _subq"
-        return base
+        return _base_sql(
+            self.options.get("sql"), self.options.get("source_table"), None
+        )
 
     def _url(self) -> str:
         url = self.options.get("url")
@@ -505,35 +492,14 @@ class ArrowHttpDataSource(DataSource):
             raise ValueError("dd_read_arrow: `url` option is required")
         return url
 
-    def _agg_options(self) -> tuple[str, str | None, list[str]] | None:
-        """Split-mode aggregation pushdown options (set by
-        dd_read_arrow_agg): the partial-aggregate SELECT list, optional
-        WHERE, and GROUP BY keys. None when this is a plain scan."""
-        select = self.options.get("agg_select")
-        if not select:
-            return None
-        gb = self.options.get("agg_group_by")
-        return (
-            select,
-            self.options.get("agg_where") or None,
-            [k.strip() for k in gb.split(",")] if gb else [],
-        )
-
     def schema(self) -> StructType:
         """Cheap schema probe: LIMIT 0 wrapper, read only the Arrow schema
         message (vs the reference's full-result fetch at Bind,
-        read_arrow_dd.cpp:353-378). In split-agg mode the probe wraps
-        the aggregate over the WHOLE base relation — the identical
-        template every split runs over its slice, so one round trip
-        yields the schema shared by all N split partials."""
+        read_arrow_dd.cpp:353-378)."""
         import pyarrow as pa
         from pyspark.sql.pandas.types import from_arrow_schema
 
-        base = self._base_query()
-        agg = self._agg_options()
-        if agg is not None:
-            base = _agg_wrap(base, *agg)
-        probe = f"SELECT * FROM ({base}) AS _subq LIMIT 0"
+        probe = f"SELECT * FROM ({self._base_query()}) AS _subq LIMIT 0"
         token = self.options.get("auth_token")
         with _open_stream(
             _query_url(self._url(), probe, _new_query_id()), token
@@ -551,22 +517,18 @@ class ArrowHttpDataSource(DataSource):
             token=self.options.get("auth_token"),
             split=str(self.options.get("split", "false")).lower() == "true",
             split_size=int(self.options.get("split_size", 0)) or None,
-            agg=self._agg_options(),
             expected_names=[f.name for f in schema.fields],
         )
 
 
 class ArrowHttpReader(DataSourceReader):
-    def __init__(self, url, base_query, token, split, split_size, agg=None,
+    def __init__(self, url, base_query, token, split, split_size,
                  expected_names=None):
         self.url = url
         self.base_query = base_query
         self.token = token
         self.split = split
         self.split_size = split_size
-        # split-agg mode: (select_list, where, group_keys) — each
-        # partition's query wraps its split in the aggregate template
-        self.agg = agg
         # declared result column names: Spark binds arrow batches to
         # the declared schema BY POSITION, so a replica answering with
         # a different column order (fleet inconsistency — what the
@@ -578,14 +540,6 @@ class ArrowHttpReader(DataSourceReader):
 
     # -- pushdown ----------------------------------------------------
     def pushFilters(self, filters):  # noqa: N802 (Spark API name)
-        if self.agg is not None:
-            # split-agg mode: this scan yields PARTIAL aggregates that
-            # Spark still has to merge — a filter applied per split
-            # pre-merge would be wrong for any predicate over an
-            # aggregate output, so nothing is consumed here. (The
-            # caller's WHERE travels inside the agg template instead.)
-            yield from filters
-            return
         for f in filters:
             frag = filter_to_sql(f)
             if frag is None:
@@ -602,8 +556,6 @@ class ArrowHttpReader(DataSourceReader):
 
     # -- planning ----------------------------------------------------
     def partitions(self):
-        if self.agg is not None:
-            return self._agg_partitions()
         sql = self._effective_query()
         if not self.split:
             return [
@@ -617,38 +569,6 @@ class ArrowHttpReader(DataSourceReader):
                 endpoint=(s["endpoints"][0] if s["endpoints"] else self.url),
                 query=s["query"],
                 # fresh id per split (read_arrow_dd.cpp:457-466)
-                query_id=_new_query_id(),
-                producer_id=s["producer_id"],
-                split_size=s["split_size"],
-                query_checksum=s["query_checksum"],
-                value=i,
-                endpoints=tuple(s["endpoints"]) or (self.url,),
-            )
-            for i, s in enumerate(plan)
-        ]
-
-    def _agg_partitions(self):
-        """Split-mode aggregation pushdown: ONE scan relation whose
-        partitions each carry their split's rewritten aggregate SQL —
-        the exact mechanism the plain split scan uses, so the driver
-        plan holds a single source node regardless of split count
-        (1000 splits = 1000 InputPartitions, not 1000 unioned scans).
-
-        The split plan is taken over the FILTERED relation (base +
-        WHERE): a selective predicate shrinks the split count the same
-        way it shrinks the non-agg split path, instead of planning the
-        unfiltered base into many near-empty per-split queries.
-        Re-applying the WHERE inside the agg template per split stays
-        correct because the predicate is idempotent."""
-        select, where, group_by = self.agg
-        filtered = self.base_query
-        if where:
-            filtered = f"SELECT * FROM ({filtered}) AS _subq WHERE {where}"
-        plan = _fetch_plan(self.url, filtered, self.split_size, self.token)
-        return [
-            ArrowSplit(
-                endpoint=(s["endpoints"][0] if s["endpoints"] else self.url),
-                query=_agg_wrap(s["query"], select, where, group_by),
                 query_id=_new_query_id(),
                 producer_id=s["producer_id"],
                 split_size=s["split_size"],
@@ -754,8 +674,81 @@ class ArrowHttpReader(DataSourceReader):
 # ------------------------------------------------------------ helpers
 
 
+_SHIM_JAR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
+    "jars",
+    "dd_arrow_shim.jar",
+)
+_SHIM_LOADERS: dict[str, object] = {}  # applicationId -> JVM class loader
+_SHIM_LOCK = threading.Lock()
+
+
+def _load_shim(spark) -> None:
+    """Make ``format("dd_arrow_dsv2")`` resolvable on the calling thread.
+
+    ``ADD JAR`` runs once per SparkContext: it ships the jar to the
+    executors and adds it to the session's shared jar class loader.
+    Spark resolves a format's short name through the calling JVM
+    thread's context class loader, and ``ADD JAR`` installs that loader
+    only on the thread that ran it; with PySpark's pinned threads every
+    Python thread has its own JVM thread, so each call points the
+    current one at the jar class loader."""
+    key = spark.sparkContext.applicationId
+    with _SHIM_LOCK:
+        loader = _SHIM_LOADERS.get(key)
+        if loader is None:
+            spark.sql(f"ADD JAR {_SHIM_JAR}")
+            loader = spark._jsparkSession.sharedState().jarClassLoader()
+            _SHIM_LOADERS[key] = loader
+    spark._jvm.java.lang.Thread.currentThread().setContextClassLoader(loader)
+
+
 def register(spark) -> None:
+    """Load the JVM shim the builders run on and register the Python
+    reference source as ``format("dd_read_arrow")``."""
+    _load_shim(spark)
     spark.dataSource.register(ArrowHttpDataSource)
+
+
+def _shim_reader(spark, url, query, auth_token, split, split_size):
+    _load_shim(spark)
+    r = (
+        spark.read.format("dd_arrow_dsv2")
+        .option("url", url)
+        .option("query", query)
+    )
+    if auth_token is not None:
+        r = r.option("token", auth_token)
+    if split:
+        r = r.option("split", "true")
+    if split_size is not None:
+        r = r.option("split_size", str(split_size))
+    return r
+
+
+def _load(reader):
+    """Load with the Python source's type mapping: Spark's JVM Arrow
+    conversion reads a tz-naive Arrow timestamp as TIMESTAMP_NTZ, while
+    ``from_arrow_schema`` reads it as TIMESTAMP holding the naive value
+    as UTC. Re-declaring those columns as TIMESTAMP reads the same
+    microseconds as UTC instants; the reload reuses the probed schema,
+    so it costs no round trip."""
+    from pyspark.sql import types as T
+
+    df = reader.load()
+    fields = df.schema.fields
+    if not any(isinstance(f.dataType, T.TimestampNTZType) for f in fields):
+        return df
+    return reader.schema(
+        T.StructType(
+            [
+                T.StructField(f.name, T.TimestampType(), f.nullable)
+                if isinstance(f.dataType, T.TimestampNTZType)
+                else f
+                for f in fields
+            ]
+        )
+    ).load()
 
 
 def dd_read_arrow(
@@ -772,39 +765,26 @@ def dd_read_arrow(
     schema=None,
 ):
     """DataFrame builder mirroring the table-function signature
-    (read_arrow_dd.cpp:880-891).
+    (read_arrow_dd.cpp:880-891), served by the JVM shim.
 
-    `select` (alias: `columns`) pushes an explicit projection to the
-    server, mirroring the reference's transparent column pruning
-    (read_arrow_dd.cpp:246-262): the remote SELECT list carries only the
-    named columns, so the wire payload shrinks with the projection. The
-    Python DataSource API (Spark 4.1) exposes no column-pruning hook, so
-    downstream ``.select(...)`` cannot derive this automatically — a
-    narrow query over a wide remote table should always pass `select`.
+    Downstream ``.select``/``.filter``/``.groupBy().agg`` push into the
+    remote SQL on their own, as the reference's optimizer does
+    (read_arrow_dd.cpp:246-296, aggregation_pushdown.cpp:247-418).
+    `select` (alias: `columns`) fixes the base relation's SELECT list
+    explicitly, which also narrows the schema probe.
 
     `schema` (a StructType) skips the LIMIT-0 probe entirely — used when
-    the caller already knows the result schema (e.g. the split-mode
-    aggregation builder probes once and reuses it for every split).
+    the caller already knows the result schema.
     """
     if columns and select:
         raise ValueError("dd_read_arrow: pass `select` or `columns`, not both")
-    columns = select or columns
-    r = spark.read.format("dd_read_arrow").option("url", url)
+    r = _shim_reader(
+        spark, url, _base_sql(sql, source_table, select or columns),
+        auth_token, split, split_size,
+    )
     if schema is not None:
-        r = r.schema(schema)
-    if sql is not None:
-        r = r.option("sql", sql)
-    if source_table is not None:
-        r = r.option("source_table", source_table)
-    if auth_token is not None:
-        r = r.option("auth_token", auth_token)
-    if split:
-        r = r.option("split", "true")
-    if split_size is not None:
-        r = r.option("split_size", str(split_size))
-    if columns:
-        r = r.option("columns", ",".join(columns))
-    return r.load()
+        return r.schema(schema).load()
+    return _load(r)
 
 
 def dd_read_arrow_narrow(
@@ -813,69 +793,14 @@ def dd_read_arrow_narrow(
     plan_fn,
     **options,
 ):
-    """Automatic projection pruning for the remote source: the caller
-    writes a plain downstream query and the helper derives the pruned
-    server-side SELECT — no hand-maintained `columns=` list.
-
-    The reference prunes transparently inside DuckDB's optimizer
-    (read_arrow_dd.cpp:246-262,296); Spark 4.1's Python DataSource API
-    exposes no column-pruning hook (DataSourceReader has only
-    partitions/pushFilters/read, and the physical BatchScan over a
-    Python source keeps the full ReadSchema — verified empirically), so
-    this helper recovers the same wire saving one level up:
-
-    1. build the wide remote DataFrame and apply ``plan_fn`` to it;
-    2. collect, from Catalyst's *optimized* logical plan, every scan
-       column any downstream operator references (optimized, so columns
-       a later select/drop discards are already gone);
-    3. rebuild the source with ``select=<referenced columns>`` — the
-       remote SELECT list shrinks, so the wire payload does — and
-       re-apply ``plan_fn``.
-
-    ``plan_fn`` must be a pure DataFrame -> DataFrame function (it runs
-    twice). Costs one extra LIMIT-0 schema probe for the rebuilt
-    source; nothing is executed. Falls back to the unpruned plan when
-    every column is referenced — silently, since nothing was lost — or
-    when the JVM plan is unreachable (e.g. Spark Connect), LOUDLY via
-    ``warnings.warn``: a Connect caller would otherwise believe the
-    projection was pushed while full-width rows cross the wire; they
-    should pass ``select=`` explicitly there."""
-    if options.get("select") or options.get("columns"):
-        # caller already prunes by hand — nothing to derive
-        return plan_fn(dd_read_arrow(spark, url, **options))
-    wide = dd_read_arrow(spark, url, **options)
-    downstream = plan_fn(wide)
-    try:
-        plan = downstream._jdf.queryExecution().optimizedPlan()
-        needed: set[str] = set()
-
-        def walk(node) -> None:
-            if "DataSourceV2ScanRelation" not in node.nodeName():
-                refs = node.references().toSeq()
-                for i in range(refs.size()):
-                    needed.add(refs.apply(i).name())
-            ch = node.children()
-            for i in range(ch.size()):
-                walk(ch.apply(i))
-
-        walk(plan)
-    except Exception as e:
-        import warnings
-
-        warnings.warn(
-            "dd_read_arrow_narrow: cannot reach the optimized plan "
-            f"({type(e).__name__}: {e}) — likely Spark Connect, where "
-            "_jdf is unavailable. Serving the UNPRUNED remote scan; "
-            "pass select=[...] to dd_read_arrow to prune the wire "
-            "payload explicitly.",
-            RuntimeWarning,
-            stacklevel=2,
-        )
-        return downstream  # no py4j plan access — serve unpruned
-    pruned = [c for c in wide.columns if c in needed]
-    if not pruned or len(pruned) == len(wide.columns):
-        return downstream
-    return plan_fn(dd_read_arrow(spark, url, select=pruned, **options))
+    """``plan_fn(dd_read_arrow(spark, url, **options))``: a plain
+    downstream query over the remote source, with no hand-maintained
+    ``select=`` list. The shim prunes the remote SELECT to the columns
+    ``plan_fn`` references (``SupportsPushDownRequiredColumns``, the
+    reference's transparent pruning, read_arrow_dd.cpp:246-262) and
+    pushes its filters and aggregates with them, so only the columns
+    the query needs cross the wire."""
+    return plan_fn(dd_read_arrow(spark, url, **options))
 
 
 _SPLIT_SAFE_FNS = ("count", "sum", "min", "max")  # IsSplitSafe set
@@ -980,11 +905,11 @@ def dd_read_arrow_agg(
 
     The reference rewrites a host-side aggregate over a remote scan into
     ``SELECT <aggs> FROM (<orig>) AS _subq [WHERE ..] [GROUP BY ..]``
-    transparently (src/optimizer/aggregation_pushdown.cpp:247-418); the
-    Python DataSource API has no aggregate hook, so this helper emits
-    the same rewrite explicitly. A plain ``dd_read_arrow(...).agg(...)``
-    still works but ships raw rows — at scale, always use this for
-    remote aggregation.
+    transparently (src/optimizer/aggregation_pushdown.cpp:247-418).
+    The shim does the same for a plain ``dd_read_arrow(...).agg(...)``
+    whose aggregates Catalyst can translate (column references only);
+    this builder takes server-dialect expressions instead, so any
+    aggregate the server understands runs there.
 
     `aggs` maps output alias -> SQL aggregate expression (server
     dialect), e.g. ``{"n": "count(*)", "sum_qty": "sum(l_quantity)"}``.
@@ -996,9 +921,10 @@ def dd_read_arrow_agg(
     aggregate over its slice server-side, and Spark merges the partials
     (sum of sums/counts, min of mins, max of maxes) — the aggregation
     itself distributes across the server fleet instead of running in
-    one stream. The partials arrive through ONE scan relation whose
-    InputPartitions each carry their split's rewritten aggregate SQL
-    (the same mechanism the plain split scan uses), so the driver-side
+    one stream. The partials arrive through ONE shim scan whose input
+    partitions each carry their split's rewritten aggregate SQL (the
+    ``agg_*`` options; the same mechanism the plain split scan uses),
+    so the driver-side
     plan is O(1) in split count — a 1000-split fleet costs 1000 tasks,
     not a 1000-ary union of scan nodes. Only split-safe aggregates are
     accepted; ``avg`` and ``DISTINCT`` (and any compound expression)
@@ -1018,29 +944,19 @@ def dd_read_arrow_agg(
         + [f"{expr} AS {alias}" for alias, expr in aggs.items()]
     )
 
-    if not split:
-        return dd_read_arrow(
-            spark, url, sql=_agg_wrap(base, select, where, keys),
-            auth_token=auth_token,
-        )
-
-    merges = {a: _split_safe_merge(a, e) for a, e in aggs.items()}
-    r = (
-        spark.read.format("dd_read_arrow")
-        .option("url", url)
-        .option("sql", base)
-        .option("split", "true")
-        .option("agg_select", select)
+    merges = (
+        {a: _split_safe_merge(a, e) for a, e in aggs.items()} if split else {}
+    )
+    r = _shim_reader(spark, url, base, auth_token, split, split_size).option(
+        "agg_select", select
     )
     if where:
         r = r.option("agg_where", where)
     if keys:
         r = r.option("agg_group_by", ",".join(keys))
-    if auth_token:
-        r = r.option("auth_token", auth_token)
-    if split_size:
-        r = r.option("split_size", str(split_size))
-    partials = r.load()
+    partials = _load(r)
+    if not split:
+        return partials  # one stream: the server's result is final
     grouped = partials.groupBy(*keys) if keys else partials.groupBy()
     return grouped.agg(
         *[m(alias).alias(alias) for alias, m in merges.items()]

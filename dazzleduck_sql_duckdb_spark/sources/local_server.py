@@ -161,12 +161,20 @@ class _Handler(BaseHTTPRequestHandler):
         if not sql:
             return self._deny(400, "missing q")
         query_id = int(qs.get("id", ["0"])[0])
+        with self.server.fault_lock:
+            fail = self.server.fail_first_queries > 0
+            if fail:
+                self.server.fail_first_queries -= 1
+        if fail:
+            return self._deny(503, "injected: service unavailable")
         self.server.queries.append(sql)
         con = self._connect()  # must outlive the lazy relation
         try:
             tbl = con.sql(sql).arrow()
         except Exception as e:
             return self._deny(400, f"query error: {e}")
+        if self.server.reverse_columns:
+            tbl = tbl.select(tbl.column_names[::-1])
         self.send_response(200)
         self.send_header("Content-Type", "application/vnd.apache.arrow.stream")
         self.send_header("Transfer-Encoding", "chunked")
@@ -274,6 +282,7 @@ class _Handler(BaseHTTPRequestHandler):
         sql = qs.get("q", [None])[0]
         if not sql:
             return self._deny(400, "missing q")
+        self.server.plans.append(sql)
         split_size = int(
             self.headers.get("x-dd-split-size", DEFAULT_SPLIT_SIZE)
         )
@@ -390,6 +399,7 @@ class ArrowTestServer(ThreadingHTTPServer):
         compression: str | None = None,
         extra_endpoints: list[str] | None = None,
         truncate_after_batches: int | None = None,
+        fail_first_queries: int = 0,
     ):
         super().__init__(("127.0.0.1", port), _Handler)
         self.tables = dict(tables)
@@ -403,11 +413,21 @@ class ArrowTestServer(ThreadingHTTPServer):
         # the EOS marker (valid HTTP framing) — the torn-stream shape
         # the readers' EOS guard must catch
         self.truncate_after_batches = truncate_after_batches
+        # fault injection: answer the next N /v1/query requests with
+        # 503 before running them (counts down; tests may set it after
+        # the schema probe so only data reads fail)
+        self.fail_first_queries = fail_first_queries
+        self.fault_lock = threading.Lock()
+        # fault injection (set it to turn on): serve every /v1/query
+        # result with its columns in reverse order — an inconsistent
+        # replica whose schema disagrees with the one the client declared
+        self.reverse_columns = False
         # advertised ahead of this server's own address in every split's
         # endpoints[] — lets tests plant dead/unreachable replicas to
         # exercise client-side failover
         self.extra_endpoints = list(extra_endpoints or [])
         self.queries: list[str] = []
+        self.plans: list[str] = []  # /v1/plan requests' SQL
         self.cancelled: list[int] = []
         self._thread: threading.Thread | None = None
 

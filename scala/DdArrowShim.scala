@@ -1,25 +1,26 @@
 /*
  * DSv2 shim for the dazzleduck Arrow-over-HTTP wire protocol.
  *
- * Closes the two "inherent to pure PySpark" gaps (OPERATORS.md memo):
- * the Python DataSource API (pyspark.sql.datasource) exposes
- * pushFilters (4.1+) but has NO hook for required-column pruning or
- * aggregate pushdown, so a plain .select()/.agg() over dd_read_arrow
- * ships wide/raw rows unless the caller uses the explicit
- * dd_read_arrow_narrow / dd_read_arrow_agg spellings. This ~350-line
- * Scala class implements SupportsPushDownRequiredColumns,
- * SupportsPushDownFilters and SupportsPushDownAggregates, delegating
- * all heavy lifting to the SAME server-side SQL rewrite contract the
- * Python source uses (reference behavior:
- * src/scanner/read_arrow_dd.cpp:246-296 for projection,
- * src/optimizer/aggregation_pushdown.cpp:247-418 for aggregation).
+ * The scan behind every dd_read_arrow* builder
+ * (sources/arrow_http.py): schema probe, split planning and reads run
+ * in the JVM, with no Python planner or worker round trip. The Python
+ * DataSource API exposes pushFilters (4.1+) but no hook for
+ * required-column pruning or aggregate pushdown; this provider
+ * implements SupportsPushDownRequiredColumns, SupportsPushDownFilters
+ * and SupportsPushDownAggregates on the server-side SQL rewrite
+ * contract of the Python reference source (format dd_read_arrow)
+ * (reference behavior: src/scanner/read_arrow_dd.cpp:246-296 for
+ * projection, src/optimizer/aggregation_pushdown.cpp:247-418 for
+ * aggregation), plus dd_read_arrow_agg's explicit aggregate template
+ * (options agg_select / agg_where / agg_group_by).
  *
  * Packaged under org.apache.spark.sql.* deliberately: the shim reuses
  * Spark's private[sql] ArrowUtils for Arrow->Catalyst schema
  * conversion instead of duplicating the type table.
  *
  * Build: tools/build_shim.sh (bundled scalac, no network). Load:
- * spark.jars=<repo>/dazzleduck_sql_duckdb_spark/jars/dd_arrow_shim.jar
+ * sources.arrow_http.register(spark) (ADD JAR at runtime), or
+ * spark.jars=<repo>/dazzleduck_sql_duckdb_spark/jars/dd_arrow_shim.jar,
  * then spark.read.format("dd_arrow_dsv2").option("url", ...).
  */
 package org.apache.spark.sql.dazzleduck
@@ -44,28 +45,72 @@ import org.apache.spark.sql.vectorized.{ArrowColumnVector, ColumnarBatch, Column
 // ----------------------------------------------------------- wire client
 
 object DdWire {
+  // bounded retry on stream open (sources/arrow_http.py HTTP_RETRIES /
+  // HTTP_BACKOFF_S): attempt k waits BackoffMs * 2^k before the next
+  val HttpRetries = 3
+  val BackoffMs = 200L
+
+  /** 5xx or connection failure: safe to retry the open. */
+  class TransientHttpException(msg: String, cause: Throwable = null)
+    extends RuntimeException(msg, cause)
+
   def queryUrl(base: String, sql: String, qid: Long): String =
     base.stripSuffix("/") + "/v1/query?q=" +
       URLEncoder.encode(sql, "UTF-8") + "&id=" + qid
 
-  def open(url: String, token: String): InputStream = {
-    val conn =
-      new URL(url).openConnection().asInstanceOf[HttpURLConnection]
-    conn.setRequestMethod("GET")
-    conn.setConnectTimeout(30000)
-    conn.setReadTimeout(300000)
-    if (token != null && token.nonEmpty) {
-      conn.setRequestProperty("Authorization", "Bearer " + token)
+  /** One GET. 200 returns the body; 4xx is a client error and throws a
+   *  plain RuntimeException (never retried — the reference's
+   *  InvalidInput vs IOException split, arrow_http_client.cpp:82-89);
+   *  5xx and connection failures throw TransientHttpException. */
+  private def openOnce(
+      url: String,
+      token: String,
+      headers: Seq[(String, String)]): InputStream = {
+    val (conn, code) =
+      try {
+        val c = new URL(url).openConnection().asInstanceOf[HttpURLConnection]
+        c.setRequestMethod("GET")
+        c.setConnectTimeout(30000)
+        c.setReadTimeout(300000)
+        if (token != null && token.nonEmpty) {
+          c.setRequestProperty("Authorization", "Bearer " + token)
+        }
+        headers.foreach { case (k, v) => c.setRequestProperty(k, v) }
+        (c, c.getResponseCode)
+      } catch {
+        case e: java.io.IOException =>
+          throw new TransientHttpException(
+            s"dd_arrow_dsv2: connection failed: $url: $e", e)
+      }
+    if (code == 200) return conn.getInputStream
+    val err = conn.getErrorStream
+    val msg = if (err == null) "" else new String(err.readAllBytes(), "UTF-8")
+    val text = s"dd_arrow_dsv2: HTTP $code from $url: $msg"
+    if (code >= 500) throw new TransientHttpException(text)
+    throw new RuntimeException(text)
+  }
+
+  /** Open with bounded retry of transient failures on the SAME url —
+   *  right for the idempotent schema probe and /v1/plan. /v1/query
+   *  data reads pass retries = 1 and retry in DdColumnarReader with a
+   *  fresh query id per attempt. */
+  def open(
+      url: String,
+      token: String,
+      retries: Int = HttpRetries,
+      headers: Seq[(String, String)] = Seq.empty): InputStream = {
+    var opened: InputStream = null
+    var attempt = 0
+    while (opened == null) {
+      try opened = openOnce(url, token, headers)
+      catch {
+        case e: TransientHttpException =>
+          if (attempt >= retries - 1) throw e
+          Thread.sleep(BackoffMs << attempt)
+          attempt += 1
+      }
     }
-    val code = conn.getResponseCode
-    if (code != 200) {
-      val err = conn.getErrorStream
-      val msg =
-        if (err == null) "" else new String(err.readAllBytes(), "UTF-8")
-      throw new RuntimeException(
-        s"dd_arrow_dsv2: HTTP $code from $url: $msg")
-    }
-    conn.getInputStream
+    opened
   }
 
   /** Best-effort GET /v1/cancel (cancel_monitor.cpp semantics:
@@ -97,21 +142,11 @@ object DdWire {
       token: String): Array[(Array[String], String)] = {
     val url = base.stripSuffix("/") + "/v1/plan?q=" +
       URLEncoder.encode(sql, "UTF-8")
-    val conn =
-      new URL(url).openConnection().asInstanceOf[HttpURLConnection]
-    conn.setRequestMethod("GET")
-    conn.setRequestProperty("Accept", "application/json")
-    if (splitSize > 0) {
-      conn.setRequestProperty("x-dd-split-size", splitSize.toString)
-    }
-    if (token != null && token.nonEmpty) {
-      conn.setRequestProperty("Authorization", "Bearer " + token)
-    }
-    if (conn.getResponseCode != 200) {
-      throw new RuntimeException(
-        s"dd_arrow_dsv2: plan HTTP ${conn.getResponseCode} from $url")
-    }
-    val body = conn.getInputStream.readAllBytes()
+    val headers = Seq("Accept" -> "application/json") ++
+      (if (splitSize > 0) Seq("x-dd-split-size" -> splitSize.toString)
+       else Seq.empty)
+    val in = open(url, token, headers = headers)
+    val body = try in.readAllBytes() finally in.close()
     val mapper = new com.fasterxml.jackson.databind.ObjectMapper()
     val root = mapper.readTree(body)
     val out = scala.collection.mutable.ArrayBuffer[(Array[String], String)]()
@@ -132,15 +167,21 @@ object DdWire {
   }
 
   /** Arrow schema of `sql` via a LIMIT-0 probe (the reference's own
-   *  schema-discovery pattern). */
+   *  schema-discovery pattern). The response is read to its end: a
+   *  client closing a connection mid-response is how a server sees a
+   *  cancelled query, and a fully read one can be reused. */
   def probeSchema(base: String, sql: String, token: String): StructType = {
     val alloc = new RootAllocator(Long.MaxValue)
     val in = open(queryUrl(base, s"SELECT * FROM ($sql) __dd_p LIMIT 0",
       System.nanoTime()), token)
     try {
       val reader = new ArrowStreamReader(in, alloc)
-      try ArrowUtils.fromArrowSchema(reader.getVectorSchemaRoot.getSchema)
-      finally reader.close()
+      try {
+        val schema = reader.getVectorSchemaRoot.getSchema
+        while (reader.loadNextBatch()) {}
+        while (in.read() >= 0) {}
+        ArrowUtils.fromArrowSchema(schema)
+      } finally reader.close()
     } finally {
       in.close()
       alloc.close()
@@ -160,7 +201,13 @@ object DdWire {
       if (d.isNaN || d.isInfinite) None else Some(d.toString)
     case d: java.math.BigDecimal => Some(d.toPlainString)
     case d: java.sql.Date => Some(s"DATE '$d'")
-    case t: java.sql.Timestamp => Some(s"TIMESTAMP '$t'")
+    case t: java.sql.Timestamp =>
+      // remote tz-naive timestamps are read as UTC instants (the Python
+      // source's mapping), so the literal is the UTC wall clock, not
+      // the JVM default zone's
+      Some("TIMESTAMP '" + java.time.format.DateTimeFormatter
+        .ofPattern("yyyy-MM-dd HH:mm:ss.SSSSSS")
+        .format(t.toInstant.atOffset(java.time.ZoneOffset.UTC)) + "'")
     case _ => None
   }
 
@@ -234,9 +281,22 @@ class DdArrowDataSource extends TableProvider
       "dd_arrow_dsv2 needs option 'query' or 'path'")
   }
 
-  override def inferSchema(opts: CaseInsensitiveStringMap): StructType =
-    DdWire.probeSchema(
-      opts.get("url"), baseQuery(opts), opts.getOrDefault("token", ""))
+  private def splitAgg(opts: CaseInsensitiveStringMap): Option[SplitAgg] =
+    Option(opts.get("agg_select")).filter(_.nonEmpty).map { sel =>
+      val gb = opts.get("agg_group_by")
+      SplitAgg(sel, Option(opts.get("agg_where")).filter(_.nonEmpty),
+        if (gb == null || gb.isEmpty) Seq.empty else gb.split(",").toSeq)
+    }
+
+  // with agg_* options the scan yields the aggregate (per split: its
+  // partials), so the probe wraps the aggregate over the WHOLE base
+  // relation: the same template every split runs over its slice
+  override def inferSchema(opts: CaseInsensitiveStringMap): StructType = {
+    val base = baseQuery(opts)
+    DdWire.probeSchema(opts.get("url"),
+      splitAgg(opts).fold(base)(_.wrap(base)),
+      opts.getOrDefault("token", ""))
+  }
 
   override def getTable(
       schema: StructType,
@@ -246,10 +306,32 @@ class DdArrowDataSource extends TableProvider
     new DdTable(schema, opts.get("url"), baseQuery(opts),
       opts.getOrDefault("token", ""),
       opts.getBoolean("split", false),
-      opts.getLong("split_size", 0L))
+      opts.getLong("split_size", 0L),
+      splitAgg(opts))
   }
 
   override def supportsExternalMetadata(): Boolean = true
+}
+
+/** Aggregation pushdown spelled out by the caller (options
+ *  agg_select / agg_where / agg_group_by, set by sources/arrow_http.py
+ *  dd_read_arrow_agg): the reference's rewrite template
+ *  SELECT <aggs> FROM (<rel>) AS _subq [WHERE ..] [GROUP BY ..]
+ *  (aggregation_pushdown.cpp:247-418), over the base relation without
+ *  splits, else over every split's slice. The split plan is taken over
+ *  the FILTERED relation, so a selective WHERE shrinks the split
+ *  count; re-applying it inside the template is idempotent. */
+case class SplitAgg(select: String, where: Option[String], groupBy: Seq[String]) {
+  private val post: String =
+    ") AS _subq" + where.fold("")(" WHERE " + _) +
+      (if (groupBy.isEmpty) ""
+       else " GROUP BY " + groupBy.map(k => DdWire.quoteIdent(k.trim))
+         .mkString(", "))
+
+  def wrapParts: (String, String) = (s"SELECT $select FROM (", post)
+  def wrap(rel: String): String = s"SELECT $select FROM ($rel$post"
+  def filtered(base: String): String =
+    where.fold(base)(w => s"SELECT * FROM ($base) AS _subq WHERE $w")
 }
 
 class DdTable(
@@ -258,14 +340,27 @@ class DdTable(
     base: String,
     token: String,
     split: Boolean,
-    splitSize: Long) extends Table with SupportsRead {
+    splitSize: Long,
+    agg: Option[SplitAgg] = None) extends Table with SupportsRead {
   override def name(): String = s"dd_arrow($base)"
   override def schema(): StructType = tableSchema
   override def capabilities(): util.Set[TableCapability] =
     util.EnumSet.of(TableCapability.BATCH_READ)
   override def newScanBuilder(
-      opts: CaseInsensitiveStringMap): ScanBuilder =
-    new DdScanBuilder(tableSchema, url, base, token, split, splitSize)
+      opts: CaseInsensitiveStringMap): ScanBuilder = agg match {
+    // split partials still need Spark's merge above the scan: pushing
+    // a filter, a pruned column list or another aggregate into them
+    // would change what each split computes, so nothing is pushed
+    case Some(a) => new ScanBuilder {
+      override def build(): Scan =
+        new DdScan(tableSchema, url, a.wrap(base), token, Array.empty,
+          aggPushed = true, emptyProjection = false, split = split,
+          splitSize = splitSize, splitPlanSql = a.filtered(base),
+          splitAggWrap = Some(a.wrapParts))
+    }
+    case None =>
+      new DdScanBuilder(tableSchema, url, base, token, split, splitSize)
+  }
 }
 
 // --------------------------------------------------------- scan builder
@@ -530,7 +625,12 @@ class DdScan(
     s"dd_arrow_dsv2 PushedFilters: [${pushed.mkString(", ")}], " +
       s"PushedAggregation: $aggPushed, RemoteSql: $sql"
 
-  override def planInputPartitions(): Array[InputPartition] =
+  override def planInputPartitions(): Array[InputPartition] = partitions
+
+  // one /v1/plan per scan: Spark asks more than one copy of the
+  // physical scan node for its partitions (two /v1/plan round trips
+  // per query without this), and the splits are the same for all
+  private lazy val partitions: Array[InputPartition] =
     if (split) {
       // plan over the PRUNED+FILTERED base relation: each split is
       // the server's rewritten slice of it; with an aggregate pushed,
@@ -681,26 +781,35 @@ class DdColumnarReader(p: DdPartition, token: String,
   private val in: EosTrackingStream = {
     val eps = if (p.endpoints.nonEmpty) p.endpoints else Array("")
     val start = math.floorMod(p.value, eps.length)
+    // untried replicas first, then back off and go round again: at
+    // least HttpRetries attempts, each with a FRESH query id
+    // (re-issuing one id could double-execute server-side). A 4xx is
+    // a client error and propagates without retry.
+    val attempts = math.max(DdWire.HttpRetries, eps.length)
     var opened: InputStream = null
     var last: Exception = null
     var i = 0
-    while (opened == null && i < eps.length) {
+    while (opened == null && i < attempts) {
       endpoint = eps((start + i) % eps.length)
       queryId = System.nanoTime()
       try {
         opened = DdWire.open(
-          DdWire.queryUrl(endpoint, p.query, queryId), token)
+          DdWire.queryUrl(endpoint, p.query, queryId), token, retries = 1)
       } catch {
-        case e: Exception =>
+        case e: DdWire.TransientHttpException =>
           last = e
           // the failed attempt's server may have started executing
           DdWire.cancelQuiet(endpoint, queryId, token)
-          i += 1
+          if (i + 1 >= eps.length && i + 1 < attempts) {
+            Thread.sleep(DdWire.BackoffMs << (i / eps.length))
+          }
       }
+      i += 1
     }
     if (opened == null) {
       throw new RuntimeException(
-        s"dd_arrow_dsv2: all ${eps.length} replica(s) failed", last)
+        s"dd_arrow_dsv2: all ${eps.length} replica(s) failed after " +
+          s"$attempts attempt(s)", last)
     }
     new EosTrackingStream(opened)
   }

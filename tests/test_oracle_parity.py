@@ -82,14 +82,12 @@ def test_prepare_pins_utc_session_timezone(spark):
 
 
 def test_gate_window_covers_every_family():
-    """Round-14 window contract (the driver gates the FIRST 50 catalog
-    entries): the five entries the r13 OPTIMIZATION sessions changed
-    after the r13 window was fixed (r13 verdict directive #1 —
-    non-optional), every entry round 14 touches or examines for change
-    (MinHash family staging, components round batching, simhash
-    mega-bucket bound, q9 re-examination), the ENTIRE r11-vintage
-    staleness cohort (38 entries, oldest in GATE_AGE.md post-r13),
-    and r12-vintage fill oldest-first. 3 + 5 + 38 + 4 = 50 exactly."""
+    """Round-15 window contract (the correctness gate hashes the FIRST
+    50 catalog entries): every entry round 15 touches — all eight remote entries,
+    whose builders moved onto the JVM shim or whose shim/server
+    harness changed — the ENTIRE r12-vintage staleness cohort (32
+    entries, oldest in GATE_AGE.md post-r14), and r13-vintage fill
+    oldest-first. 8 + 32 + 10 = 50 exactly."""
     from dazzleduck_sql_duckdb_spark.plans import queries as Q
 
     window = Q._GATE_WINDOW
@@ -97,41 +95,40 @@ def test_gate_window_covers_every_family():
     assert len(set(window)) == 50
     assert list(Q.CATALOG)[:50] == window
     changed_or_new = {
-        # r13-optimization-changed, ungated in r13 (verdict #1)
-        "dedup_minhash_lsh",        # bucket-aggregation rewrite (r13)
-        "dedup_canonical_corpus",   # struct-max tail rewrite (r13)
-        "text_perplexity_bigram",   # repartition-reuse hint (r13)
-        "events_funnel",            # hint fixed/reverted this round
-        "embed_knn_bruteforce",     # operator collect-guard trim (r13)
-        # r14 touched-or-examined
-        "dedup_minhash_auto",       # operators/dedup.py staging
-        "dedup_minhash_recall_held",  # operators/dedup.py staging
-        "dedup_components",         # components round batching
-        "dedup_simhash",            # mega-bucket bound (verdict #5)
-        "q9_product_profit",        # verdict #8 re-examination
+        # dd_read_arrow* builders now on the JVM shim
+        "remote_agg_pushdown", "remote_login_scan",
+        "remote_scan_failover", "remote_scan_filter_pushdown",
+        "remote_scan_split_agg",
+        # the shim itself: 5xx retry, agg_* options, shared loader
+        "remote_scan_dsv2", "remote_scan_dsv2_split_dec",
+        # local_server.py fault injections (harness)
+        "remote_splits_plan",
     }
+    remote = {n for n in Q.CATALOG if n.startswith("remote_")}
+    assert remote <= changed_or_new, remote - changed_or_new
     rotation = {
-        # the entire r11-vintage cohort (GATE_AGE.md post-r13)
-        "bucketed_join_rollup", "corpus_top_terms",
-        "cross_source_contamination", "customer_orders_left_join",
-        "dd_search_marker", "dedup_canonical_corpus",
-        "dedup_minhash_lsh", "dedup_stream_screen",
-        "dedup_substring_screen", "embed_cosine_neardup",
-        "embed_neardup_lsh", "embed_semantic_screen",
-        "events_hourly_rollup", "events_orders_asof_join",
-        "join_region_rollup", "multimodal_features",
-        "multimodal_jpeg_features", "multimodal_video_frames",
-        "multimodal_video_metadata", "ngram_jaccard_sampled",
-        "orders_global_aggs", "orders_group_agg", "orders_rollup",
-        "pipeline_clean_corpus", "q12_priority_shipping",
-        "q13_customer_distribution", "q14_promo_effect",
-        "q15_top_supplier", "q16_supplier_cnt",
-        "q22_sales_opportunity", "q6_revenue", "string_functions",
-        "supplier_nation_join", "text_langid", "text_normalize",
-        "text_quality", "text_repetition", "text_token_stats",
-        # r12-vintage fill (GATE_AGE.md order)
-        "cast_matrix", "cte_union_all", "dedup_exact_substring",
-        "distinct_rows",
+        # the entire r12-vintage cohort (GATE_AGE.md post-r14)
+        "embed_ann_ivf_fullprobe", "embed_ann_ivfpq_fullprobe",
+        "embed_ann_ivfpq_recall", "embed_ann_recall",
+        "embed_semantic_dedup_exact", "embed_semantic_dedup_recall",
+        "empty_set_laws", "events_count_distinct",
+        "events_grouping_sets", "events_json_extract",
+        "events_sessionize", "events_view_click_attribution",
+        "layout_zorder", "lineitem_date_filter_count",
+        "lineitem_full_scan", "lineitem_point_filter",
+        "lineitem_sum_orderkey", "nation_presence_full_join",
+        "order_by_limit", "orders_cube", "part_brand_stats",
+        "q18_large_volume", "q21_suppliers_waiting",
+        "q4_order_priority", "q8_market_share",
+        "scalar_subquery_filter", "semi_anti_join", "simhash_values",
+        "sketch_distinct_bounds", "sketch_quantile_bounds",
+        "text_perplexity_static_lm", "window_topk_per_group",
+        # r13-vintage fill (GATE_AGE.md order)
+        "bloom_no_false_negatives", "cross_source_contamination_chunked",
+        "dd_array_contains_all", "dd_array_contains_all_fn",
+        "dd_version", "dedup_exact", "docs_length_quantiles",
+        "docs_shard_assignment", "docs_stratified_sample",
+        "embed_ann_ivf_probed",
     }
     in_window = set(window)
     for group, names in [
